@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.CrossHash.{h60, tokens}
+import graft.util.{FaultPoints, FileTree}
 
 /** Materialized inverted index for BM25 probing — the index-once /
   * probe-per-query-batch shape of lexical retrieval at 100 TB (the
@@ -91,16 +92,10 @@ object Bm25Index {
     * snapshot. A crash anywhere inside append leaves the index exactly
     * at its pre-append state, and re-running the append is the normal
     * path (Bm25IndexSpec pins crashed-append invisibility + retry
-    * equality). Legacy unbatched trees (pointer without a batch field)
-    * keep the old append-then-swap behavior. */
-  def append(batch: DataFrame, path: String, buckets: Int = 32): Unit =
-    append(batch, path, buckets, failBeforeCommit = false)
-
-  /** `failBeforeCommit` is the spec's crash-injection seam: throw after
-    * every write but BEFORE the pointer swap — the widest possible
-    * crash window. Production callers never pass it. */
-  private[graft] def append(batch: DataFrame, path: String, buckets: Int,
-      failBeforeCommit: Boolean): Unit = {
+    * equality; [[FaultPoints.Bm25Append]] is that widest window: every
+    * write done, pointer not swapped). Legacy unbatched trees (pointer
+    * without a batch field) keep the old append-then-swap behavior. */
+  def append(batch: DataFrame, path: String, buckets: Int = 32): Unit = {
     val spark = batch.sparkSession
     graft.GraftExtensions.register(spark)
     val (epoch, _, postingsRel, lastBatch) = currentState(path)
@@ -138,8 +133,7 @@ object Bm25Index {
     Seq((nz(oldStats, 0) + nz(delta, 0), nz(oldStats, 1) + nz(delta, 1)))
       .toDF("n_docs", "total_dl")
       .write.mode("overwrite").parquet(s"$path/$smalls/stats")
-    if (failBeforeCommit)
-      throw new IllegalStateException("injected crash before the append commit")
+    FaultPoints.hit(FaultPoints.Bm25Append)
     writeState(path, epoch, smalls, postingsRel, math.max(lastBatch + 1, 0L))
   }
 
@@ -245,12 +239,7 @@ object Bm25Index {
       val dirs = java.nio.file.Files.list(root)
       try dirs.iterator().asScala.toList
         .filter(d => d.getFileName.toString != keep)
-        .foreach { d =>
-          val files = java.nio.file.Files.walk(d)
-          try files.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(java.nio.file.Files.delete)
-          finally files.close()
-        }
+        .foreach(FileTree.delete)
       finally dirs.close()
     }
   }
@@ -412,13 +401,6 @@ object Bm25Index {
   def compact(spark: SparkSession, path: String): Unit = {
     applyPending(spark, path)
     val (epoch, smallsRel, postingsRel, lastBatch) = currentState(path)
-    def rmTree(p: java.nio.file.Path): Unit = if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-      finally s.close()
-    }
     // Orphan collection FIRST: a crash between a prior compact's pointer
     // swap and its trailing GC strands the superseded postings dir, and
     // the retry takes one of the skip paths below and would never revisit
@@ -437,7 +419,7 @@ object Bm25Index {
             val n = d.getFileName.toString
             (n == "postings" || n.startsWith("postings_e")) && n != postingsRel
           }
-          .foreach(rmTree)
+          .foreach(FileTree.delete)
         finally s.close()
       }
     }
@@ -463,8 +445,8 @@ object Bm25Index {
       writeState(path, newEpoch, smallsRel, newRel, 0L)
       // GC the superseded dir; a crash before this line is collected by
       // the next compact's opening sweep
-      rmTree(java.nio.file.Paths.get(s"$path/$postingsRel"))
+      FileTree.delete(java.nio.file.Paths.get(s"$path/$postingsRel"))
     }
-    rmTree(java.nio.file.Paths.get(tombDir(path)))
+    FileTree.delete(java.nio.file.Paths.get(tombDir(path)))
   }
 }

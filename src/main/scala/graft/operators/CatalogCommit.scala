@@ -35,6 +35,12 @@ private[graft] object CatalogCommit {
     else Some(new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong)
   }
 
+  /** The last committed batch id — the pointer, or the highest batch
+    * partition of a pointer-less index. */
+  def committedBatch(spark: SparkSession, name: String): Long =
+    readLastBatch(spark, name).getOrElse(
+      spark.table(name).agg(coalesce(max(col("batch")), lit(0L))).head.getLong(0))
+
   def writeLastBatch(spark: SparkSession, name: String, b: Long): Unit = {
     val p = pointerPath(spark, name)
     val tmp = p.resolveSibling("_current.tmp")
@@ -50,7 +56,7 @@ private[graft] object CatalogCommit {
   def dropUncommitted(spark: SparkSession, table: String, b: Long): Unit = {
     val dir = tableLocation(spark, table).resolve(s"batch=$b")
     if (java.nio.file.Files.exists(dir)) {
-      deleteRecursively(dir)
+      graft.util.FileTree.delete(dir)
       spark.catalog.refreshTable(table)
     }
   }
@@ -66,7 +72,7 @@ private[graft] object CatalogCommit {
       val root = if (wh.contains(":/")) java.nio.file.Paths.get(new java.net.URI(wh))
         else java.nio.file.Paths.get(wh)
       val dir = root.resolve(table.toLowerCase(java.util.Locale.ROOT))
-      if (java.nio.file.Files.exists(dir)) deleteRecursively(dir)
+      graft.util.FileTree.delete(dir)
     }
 
   /** Parquet data-file count under a dir tree — the small-files metric
@@ -94,14 +100,6 @@ private[graft] object CatalogCommit {
         .filter(_.getFileName.toString.startsWith(prefix))
       finally s.close()
     }
-
-  private def deleteRecursively(dir: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val s = java.nio.file.Files.walk(dir)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.delete)
-    finally s.close()
-  }
 
   /** The `batch=<n>` partition ids physically present at a catalog
     * table's location (committed or not) — the layout-audit input of

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
+import graft.streaming.{CompactSwap, MaintainedIndex}
+
 /** Scheduled LAYOUT maintenance across a [[CurationJob]] /
   * [[DailyIncrement]] output tree — the operation that keeps the daily
   * path's probe costs flat over time.
@@ -65,25 +67,12 @@ object Maintenance {
   final case class Compacted(kind: String, name: String,
       filesBefore: Long, filesAfter: Long)
 
-  private def dataFiles(p: java.nio.file.Path): Long = {
-    if (!java.nio.file.Files.exists(p)) 0L
-    else {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.walk(p)
-      try s.iterator().asScala.count { f =>
-        val n = f.getFileName.toString
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
-      finally s.close()
-    }
-  }
-
   private def tableFiles(spark: SparkSession, table: String): Long =
     if (!spark.catalog.tableExists(table)) 0L
-    else dataFiles(CatalogCommit.tableLocation(spark, table))
+    else CatalogCommit.dataFileCount(CatalogCommit.tableLocation(spark, table))
 
   private def pathFiles(dir: String): Long =
-    dataFiles(java.nio.file.Paths.get(dir))
+    CatalogCommit.dataFileCount(java.nio.file.Paths.get(dir))
 
   /** One artifact's physical layout: `batchParts` counts its `batch=`
     * partition dirs (0 for layouts without a batch axis), `files` its
@@ -91,67 +80,27 @@ object Maintenance {
   final case class Layout(kind: String, name: String,
       batchParts: Long, files: Long)
 
-  /** The five STREAMING-maintained layouts share one shape: an `eos/`
-    * commit dir beside `batch=`-partitioned data dirs and a staged-swap
-    * compact(). Kind detects from the layout itself (quantizers before
-    * vectors — the IVF twin has both), so the registry needs only one
-    * `stream=<path>` line per index, not five spellings. */
-  private[graft] def streamedKind(root: java.nio.file.Path): Option[String] = {
-    def has(rel: String) = java.nio.file.Files.exists(root.resolve(rel))
-    if (!has("eos")) None
-    else if (has("pairs")) Some("stream-shingle")
-    else if (has("occ")) Some("stream-overlap")
-    else if (has("postings")) Some("stream-bm25")
-    else if (has("quantizers")) Some("stream-intivf")
-    else if (has("vectors")) Some("stream-vector")
-    else None
-  }
-
-  /** The file-accumulating data dirs of one streamed layout — the
-    * `batch=`-partitioned dirs whose partition count grows by one per
-    * MICRO-BATCH (~10⁵/year at 5-minute triggers) until compact() folds
-    * them, PLUS the vector/intivf twins' plain-append `tombstones` dir:
-    * a delete-heavy stream accumulates tombstone files compact() drops,
-    * so they must count toward auto()'s maxFiles threshold or
-    * delete-only churn would be invisible to the fold policy. */
-  private def streamedDataDirs(kind: String, root: java.nio.file.Path): Seq[java.nio.file.Path] =
-    kind match {
-      case "stream-shingle" => Seq(root.resolve("pairs"), root.resolve("counts"))
-      case "stream-overlap" => Seq(root.resolve("occ"))
-      case "stream-bm25" => Seq(root.resolve("postings"))
-      case _ => Seq(root.resolve("vectors"), root.resolve("tombstones"))
-    }
-
   /** Fail-loud layout resolution for a registered `stream=` root: every
     * maintained twin creates its `eos/` commit dir at INSTANTIATION, so a
     * root without one is a typo'd/stale registration — throw (silently
     * flatMap-dropping it would hide the index from status()/auto()
     * forever, against the fail-loud doctrine). A root WITH eos/ but no
     * recognized data dir yet is the legitimate brand-new-index window
-    * (instantiated, zero commits) — skipped quietly until data lands. */
-  private def streamedLayout(name: String): Option[Layout] = {
+    * (instantiated, zero commits) — skipped quietly until data lands.
+    * The kind and the file-accumulating dirs come from the index itself
+    * ([[graft.streaming.MaintainedIndex]]). */
+  private def streamedLayout(spark: SparkSession, name: String): Option[Layout] = {
     val root = java.nio.file.Paths.get(name)
     require(java.nio.file.Files.exists(root.resolve("eos")),
       s"registered stream index root '$name' has no eos/ commit dir — " +
         "every streaming-maintained index creates one at instantiation, " +
         "so this registration is a typo or points at a dead path; fix or " +
         "remove the stream= line")
-    streamedKind(root).map { kind =>
-      val dirs = streamedDataDirs(kind, root)
-      Layout(kind, name,
-        dirs.map(batchDirCount).maxOption.getOrElse(0L),
-        dirs.map(dataFiles).sum)
-    }
-  }
-
-  private def batchDirCount(p: java.nio.file.Path): Long = {
-    if (!java.nio.file.Files.exists(p)) 0L
-    else {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.list(p)
-      try s.iterator().asScala
-        .count(_.getFileName.toString.startsWith("batch="))
-      finally s.close()
+    MaintainedIndex.open(root, spark).map { idx =>
+      val dirs = idx.layoutDirs
+      Layout(idx.kind, name,
+        dirs.map(CompactSwap.batchIds(_).size.toLong).maxOption.getOrElse(0L),
+        dirs.map(CatalogCommit.dataFileCount).sum)
     }
   }
 
@@ -171,9 +120,9 @@ object Maintenance {
       (explicit ++ Takedown.recordedIndexes(outDir, kind)).distinct
     def table(kind: String, n: String) = Layout(kind, n,
       CatalogCommit.batchDirs(spark, n).size.toLong, tableFiles(spark, n))
-    def dir(kind: String, n: String, batchRoot: Option[String]) = Layout(
-      kind, n, batchRoot.map(r => batchDirCount(java.nio.file.Paths.get(r)))
-        .getOrElse(0L), pathFiles(n))
+    def dir(kind: String, n: String, batchRoot: Option[String]) = Layout(kind, n,
+      batchRoot.fold(0L)(r => CompactSwap.batchIds(java.nio.file.Paths.get(r)).size.toLong),
+      pathFiles(n))
     val bm25 = s"$outDir/bm25"
     val vectors = s"$outDir/vectors"
     recorded("shingle", shingleIndexes).map(table("shingle", _)) ++
@@ -193,7 +142,7 @@ object Maintenance {
       // record with Takedown.recordIndex(outDir, "stream", path) or pass
       // explicitly) — they fragment FASTEST: one batch= partition per
       // micro-batch, ~10⁵/year at 5-minute triggers
-      recorded("stream", streamedIndexes).flatMap(streamedLayout)
+      recorded("stream", streamedIndexes).flatMap(streamedLayout(spark, _))
   }
 
   /** Compact every artifact of the tree (see header). Returns one
@@ -269,41 +218,30 @@ object Maintenance {
     // cached index lineage across a maintenance window.
     spark.catalog.clearCache()
     targets.map { l =>
+      // the streaming-maintained twins fold via their own staged-swap
+      // compact() (probe-identical before/after, crash-safe marker
+      // protocol — each twin's spec pins it). Quiescent-STREAM contract:
+      // auto() must run in a trigger gap, exactly like calling the
+      // index's compact() by hand; a racing update() fails loud on the
+      // staged marker, never corrupts.
+      val streamed =
+        if (!l.kind.startsWith("stream-")) None
+        else MaintainedIndex.open(
+          java.nio.file.Paths.get(l.name), spark, buckets)
       def files(): Long = l.kind match {
         case "shingle" | "overlap" | "line" => tableFiles(spark, l.name)
-        case k if k.startsWith("stream-") =>
-          streamedDataDirs(k, java.nio.file.Paths.get(l.name)).map(dataFiles).sum
-        case _ => pathFiles(l.name)
+        case _ => streamed.fold(pathFiles(l.name))(
+          _.layoutDirs.map(CatalogCommit.dataFileCount).sum)
       }
       val before = files()
       l.kind match {
+        case k if k.startsWith("stream-") => streamed.foreach(_.compact())
         case "shingle" => ShingleIndex.compact(spark, l.name, buckets)
         case "overlap" => OverlapIndex.compact(spark, l.name, buckets)
         case "line" => LineSegmentIndex.compact(spark, l.name, buckets)
         case "intivf" => IntIvfIndex.compact(spark, l.name)
         case "bm25" => Bm25Index.compact(spark, l.name)
         case "vectors" => VectorIndex.compact(spark, l.name)
-        // the streaming-maintained twins fold via their own staged-swap
-        // compact() (probe-identical before/after, crash-safe marker
-        // protocol — each twin's spec pins it). Quiescent-STREAM
-        // contract: auto() must run in a trigger gap, exactly like
-        // calling the index's compact() by hand; a racing update() fails
-        // loud on the staged marker, never corrupts.
-        case "stream-shingle" =>
-          new graft.streaming.MaintainedShingleIndex(
-            java.nio.file.Paths.get(l.name), spark).compact()
-        case "stream-overlap" =>
-          new graft.streaming.MaintainedOverlapIndex(
-            java.nio.file.Paths.get(l.name), spark).compact()
-        case "stream-bm25" =>
-          new graft.streaming.MaintainedBm25Index(
-            java.nio.file.Paths.get(l.name), spark, buckets).compact()
-        case "stream-intivf" =>
-          new graft.streaming.MaintainedIntIvfIndex(
-            java.nio.file.Paths.get(l.name), spark).compact()
-        case "stream-vector" =>
-          new graft.streaming.MaintainedVectorIndex(
-            java.nio.file.Paths.get(l.name), spark).compact()
         // The flat parquet artifacts accumulate one file set per daily
         // APPEND (curated/evalh rows append; shards grow per-batch files
         // inside their hive dirs) and, unlike the indexes, have no
@@ -349,12 +287,11 @@ object Maintenance {
     val live = java.nio.file.Paths.get(d)
     val staged = java.nio.file.Paths.get(s"${d}_compact")
     val marker = java.nio.file.Paths.get(s"$outDir/_maint_staged_$rel")
-    graft.streaming.CompactSwap.recover(marker, Seq(live -> staged), Nil)
-    graft.streaming.CompactSwap.deleteRec(staged) // pre-marker leftovers
+    CompactSwap.recover(marker, Seq(live -> staged), Nil)
+    graft.util.FileTree.delete(staged) // pre-marker leftovers
     if (pathFiles(d) > target) {
       write(spark.read.parquet(d), staged.toString)
-      java.nio.file.Files.createFile(marker)
-      graft.streaming.CompactSwap.roll(marker, Seq(live -> staged), Nil)
+      CompactSwap.commit(marker, Seq(live -> staged), Nil)
     }
   }
 }

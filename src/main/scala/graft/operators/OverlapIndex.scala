@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.queries.CrossHash.shingleHashes
+import graft.util.FaultPoints
 
 /** Materialized POSITIONED shingle index — the production path for the
   * `decontam_runs` overlap-run measurement (Lee et al. 2022,
@@ -43,8 +44,8 @@ import graft.queries.CrossHash.shingleHashes
   */
 object OverlapIndex {
 
-  import CatalogCommit.{readLastBatch, writeLastBatch, dropUncommitted,
-    clearOrphanLocation}
+  import CatalogCommit.{committedBatch, readLastBatch, writeLastBatch,
+    dropUncommitted, clearOrphanLocation}
 
   /** The COMMITTED occurrence frame (doc_id, q, h) — batch-gated, NOT
     * tombstone-masked (probes go through the mask). */
@@ -88,40 +89,24 @@ object OverlapIndex {
   /** Fold a new batch of training docs into the index (ids disjoint from
     * the corpus). Single-commit: see the header. */
   def append(batch: DataFrame, name: String, buckets: Int = 32): Unit =
-    append(batch, name, buckets, failBeforeCommit = false)
+    appendAs(batch, name, committedBatch(batch.sparkSession, name) + 1, buckets)
 
   /** [[append]] with an EXPLICIT target batch id — idempotent under
     * marker-driven retries (the ShingleIndex.appendAs contract verbatim;
-    * see its scaladoc). */
+    * see its scaladoc, [[FaultPoints.OverlapAppend]] included). */
   def appendAs(batch: DataFrame, name: String, target: Long,
       buckets: Int = 32): Unit = {
     val spark = batch.sparkSession
     graft.GraftExtensions.register(spark)
-    val last = readLastBatch(spark, name).getOrElse(
-      spark.table(name).agg(coalesce(max(col("batch")), lit(0L))).head.getLong(0))
+    val last = committedBatch(spark, name)
     if (last >= target) return // already committed — the retry is a no-op
     require(last == target - 1,
       s"appendAs($target) on '$name' at committed batch $last — appends are " +
         "serialized; a gap means the staged target is stale")
     dropUncommitted(spark, name, target)
     writeBatch(batch, name, buckets, batchNo = target, overwrite = false)
+    FaultPoints.hit(FaultPoints.OverlapAppend)
     writeLastBatch(spark, name, target)
-  }
-
-  /** `failBeforeCommit` is the spec's crash-injection seam (the
-    * ShingleIndex shape). Production callers never pass it. */
-  private[graft] def append(batch: DataFrame, name: String, buckets: Int,
-      failBeforeCommit: Boolean): Unit = {
-    val spark = batch.sparkSession
-    graft.GraftExtensions.register(spark)
-    val last = readLastBatch(spark, name).getOrElse(
-      spark.table(name).agg(coalesce(max(col("batch")), lit(0L))).head.getLong(0))
-    val next = last + 1
-    dropUncommitted(spark, name, next)
-    writeBatch(batch, name, buckets, batchNo = next, overwrite = false)
-    if (failBeforeCommit)
-      throw new IllegalStateException("injected crash before the append commit")
-    writeLastBatch(spark, name, next)
   }
 
   /** Tombstone-mask documents out of the index (right-to-be-forgotten

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.CrossHash.shingleHashes
+import graft.util.FaultPoints
 
 /** Materialized corpus shingle index: the on-disk form every incremental
   * dedup scaladoc promises ("at 100 TB the corpus shingle index is written
@@ -47,8 +48,8 @@ object ShingleIndex {
   // batch id, swapped by atomic rename (the Bm25Index pointer shape).
   // Primitives shared with OverlapIndex via [[CatalogCommit]].
 
-  import CatalogCommit.{readLastBatch, writeLastBatch, dropUncommitted,
-    clearOrphanLocation}
+  import CatalogCommit.{committedBatch, readLastBatch, writeLastBatch,
+    dropUncommitted, clearOrphanLocation}
 
   /** The COMMITTED pairs frame (doc_id, h) — batch-gated, batch dropped
     * so downstream algebra is layout-agnostic. NOT tombstone-masked;
@@ -97,7 +98,7 @@ object ShingleIndex {
     * After append, probing a NEWER batch equals probing an index
     * materialized over corpus ∪ batch — ShingleIndexSpec pins it. */
   def append(batch: DataFrame, name: String, buckets: Int = 32): Unit =
-    append(batch, name, buckets, failBeforeCommit = false)
+    appendAs(batch, name, committedBatch(batch.sparkSession, name) + 1, buckets)
 
   /** [[append]] with an EXPLICIT target batch id — the idempotent form a
     * marker-driven retry protocol needs (DailyIncrement's apply steps):
@@ -105,13 +106,14 @@ object ShingleIndex {
     * `target` before the crash must be a no-op when the pointer shows the
     * append already committed (the crash landed between the index's
     * internal commit and the caller's step marker). Serialized-writer
-    * contract: `target` past the immediate next batch fails loud. */
+    * contract: `target` past the immediate next batch fails loud. The
+    * [[FaultPoints.ShingleAppend]] point sits in the widest crash window:
+    * both partition writes done, pointer not swapped. */
   def appendAs(batch: DataFrame, name: String, target: Long,
       buckets: Int = 32): Unit = {
     val spark = batch.sparkSession
     graft.GraftExtensions.register(spark)
-    val last = readLastBatch(spark, name).getOrElse(
-      spark.table(name).agg(coalesce(max(col("batch")), lit(0L))).head.getLong(0))
+    val last = committedBatch(spark, name)
     if (last >= target) return // already committed — the retry is a no-op
     require(last == target - 1,
       s"appendAs($target) on '$name' at committed batch $last — appends are " +
@@ -119,25 +121,8 @@ object ShingleIndex {
     dropUncommitted(spark, name, target)
     dropUncommitted(spark, s"${name}_counts", target)
     writeBatch(batch, name, buckets, batchNo = target, overwrite = false)
+    FaultPoints.hit(FaultPoints.ShingleAppend)
     writeLastBatch(spark, name, target)
-  }
-
-  /** `failBeforeCommit` is the spec's crash-injection seam: throw after
-    * both partition writes but BEFORE the pointer swap — the widest
-    * possible crash window. Production callers never pass it. */
-  private[graft] def append(batch: DataFrame, name: String, buckets: Int,
-      failBeforeCommit: Boolean): Unit = {
-    val spark = batch.sparkSession
-    graft.GraftExtensions.register(spark)
-    val last = readLastBatch(spark, name).getOrElse(
-      spark.table(name).agg(coalesce(max(col("batch")), lit(0L))).head.getLong(0))
-    val next = last + 1
-    dropUncommitted(spark, name, next)
-    dropUncommitted(spark, s"${name}_counts", next)
-    writeBatch(batch, name, buckets, batchNo = next, overwrite = false)
-    if (failBeforeCommit)
-      throw new IllegalStateException("injected crash before the append commit")
-    writeLastBatch(spark, name, next)
   }
 
   /** Delete documents from the index — the right-to-be-forgotten path

@@ -262,11 +262,6 @@ object Takedown {
       .foreach(n => IntIvfIndex.vacuum(spark, n))
     withRecorded(outDir, "overlap", overlapIndexes)
       .foreach(n => OverlapIndex.vacuum(spark, n))
-    val tomb = java.nio.file.Paths.get(tombDir(outDir))
-    import scala.jdk.CollectionConverters._
-    val s = java.nio.file.Files.walk(tomb)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.delete)
-    finally s.close()
+    graft.util.FileTree.delete(java.nio.file.Paths.get(tombDir(outDir)))
   }
 }

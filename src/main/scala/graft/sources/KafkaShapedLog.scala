@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.codec.Cursor
+import graft.store.RetiredFiles
+import graft.util.{FaultPoints, FileTree}
 
 /** A Kafka-shaped record log with transactional appends — the replication
   * sink (S2/S12) re-expressed without a broker.
@@ -46,7 +48,13 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
     if (Files.exists(manifestPath)) Manifest.parse(Files.readString(manifestPath))
     else Manifest(Nil, Map.empty, Map.empty, Map.empty)
 
-  private def commitManifest(m: Manifest): Unit = {
+  /** When superseded record files left the manifest ([[RetiredFiles]]). */
+  private val retiredLog = root.resolve("retired")
+
+  /** Replace `prior` (the manifest the caller read) by `m` — one atomic
+    * rename; files `m` drops are recorded as retired first. */
+  private def commitManifest(prior: Manifest, m: Manifest): Unit = {
+    RetiredFiles.retire(retiredLog, prior.files.diff(m.files))
     val tmp = root.resolve(s"manifest.${UUID.randomUUID()}.tmp")
     Files.writeString(tmp, m.render)
     Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
@@ -131,7 +139,7 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
       // empty transaction: nothing staged, nothing to commit — drop the
       // (file-less) stage dir and leave the manifest untouched, so idle
       // replication polls cost one pruned scan and zero manifest churn
-      deleteDir(stage)
+      FileTree.delete(stage)
       return 0L
     }
     val files = {
@@ -163,8 +171,10 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
       if (dropPending.isEmpty) m.pending
       else m.pending.updated(sourceTable,
         m.pending.getOrElse(sourceTable, Nil).filterNot(dropPending.contains))
-    commitManifest(Manifest(m.files ++ files, newOffsets,
-      m.cursors + (sourceTable -> newCursor), pend))
+    val next = Manifest(m.files ++ files, newOffsets,
+      m.cursors + (sourceTable -> newCursor), pend)
+    FaultPoints.hit(FaultPoints.KafkaLogAppend)
+    commitManifest(m, next)
     // promoted runs were re-staged as committed files above — their parked
     // dirs are now unreferenced; without this, every park leaks its staged
     // copy forever and pollutes the stagedFileCount orphan gauge. (A crash
@@ -191,7 +201,7 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
     val dir = root.resolve("staging").resolve(s"pending-${UUID.randomUUID()}")
     rows.write.parquet(dir.toString)
     val p = Pending(from, to, lsnMax, root.relativize(dir).toString)
-    commitManifest(m.copy(pending = m.pending.updated(sourceTable,
+    commitManifest(m, m.copy(pending = m.pending.updated(sourceTable,
       (m.pending.getOrElse(sourceTable, Nil) :+ p).sortBy(_.from))))
   }
 
@@ -203,21 +213,13 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
     * were drained by another path, e.g. a Replicator.run() recovery). */
   def discardPending(sourceTable: String, p: Pending): Unit = synchronized {
     val m = manifest()
-    commitManifest(m.copy(pending = m.pending.updated(sourceTable,
+    commitManifest(m, m.copy(pending = m.pending.updated(sourceTable,
       m.pending.getOrElse(sourceTable, Nil).filterNot(_ == p))))
     deletePendingDir(p)
   }
 
   /** Remove a dropped parked run's staged directory (never in `files`). */
-  private def deletePendingDir(p: Pending): Unit = deleteDir(root.resolve(p.dir))
-
-  private def deleteDir(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
+  private def deletePendingDir(p: Pending): Unit = FileTree.delete(root.resolve(p.dir))
 
   /** read_committed view of one topic. */
   def read(topic: String): DataFrame = {
@@ -311,28 +313,34 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
         .map(p => root.relativize(p).toString).toList.sorted
       finally s.close()
     }
-    commitManifest(m.copy(files = files))
+    FaultPoints.hit(FaultPoints.KafkaLogCompact)
+    commitManifest(m, m.copy(files = files))
   }
 
   /** Reclaim staged parquet no committed reader can reach: files under
     * staging/ that are neither manifest-listed nor part of a parked
-    * (pending) run, older than `graceMs` (size the grace to the
-    * longest-running read, as with EventLog.vacuum). Returns files
-    * deleted. */
+    * (pending) run, and left the manifest (or, if never listed, were
+    * written) more than `graceMs` ago — aged like EventLog.vacuum's
+    * superseded segments (size the grace to the longest-running read).
+    * Returns files deleted. */
   def vacuum(graceMs: Long = 0L): Int = synchronized {
     val m = manifest()
     val keepDirs = m.pending.values.flatten.map(p => root.resolve(p.dir)).toSet
     val live = m.files.toSet
     val cutoff = System.currentTimeMillis() - graceMs
+    val retired = RetiredFiles.read(retiredLog)
     val s = Files.walk(root.resolve("staging"))
     val dead =
-      try s.iterator().asScala.filter(p =>
-        p.getFileName.toString.endsWith(".parquet") &&
-          !live.contains(root.relativize(p).toString) &&
+      try s.iterator().asScala.filter { p =>
+        val rel = root.relativize(p).toString
+        rel.endsWith(".parquet") && !live.contains(rel) &&
           !keepDirs.exists(p.startsWith) &&
-          Files.getLastModifiedTime(p).toMillis <= cutoff).toList
+          RetiredFiles.since(retired, rel, p) <= cutoff
+      }.toList
       finally s.close()
     dead.foreach(Files.deleteIfExists(_))
+    RetiredFiles.forget(retiredLog,
+      dead.map(root.relativize(_).toString).filter(retired.contains))
     // drop transaction dirs left with no data files (only _SUCCESS/crc
     // markers) so the staging tree stays bounded
     val d = Files.list(root.resolve("staging"))
@@ -343,7 +351,7 @@ final class KafkaShapedLog(val root: Path, val spark: SparkSession, val numParti
         val hasParquet =
           try c.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet"))
           finally c.close()
-        if (!hasParquet) deleteDir(p)
+        if (!hasParquet) FileTree.delete(p)
       }
     finally d.close()
     dead.size

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.codec.Cursor
 import graft.model.{Event, KeyType}
+import graft.util.{FaultPoints, FileTree}
 
 /** Native per-topic event log: an append-ordered parquet directory with
   * driver-allocated monotone `(lsn, id)` — the Spark-first replacement for
@@ -74,6 +75,9 @@ final class EventLog(val root: Path, spark: SparkSession) {
 
   private def segmentsFile(topic: String): Path = metaDir(topic).resolve("segments")
 
+  /** When superseded segments left the manifest ([[RetiredFiles]]). */
+  private def retiredLog(topic: String): Path = metaDir(topic).resolve("retired")
+
   private def listParquet(d: Path): Seq[Path] = {
     if (!Files.isDirectory(d)) return Seq.empty
     val s = Files.list(d)
@@ -104,6 +108,9 @@ final class EventLog(val root: Path, spark: SparkSession) {
   private def writeSegments(topic: String, files: Seq[Path],
       cursor: Cursor): Unit = {
     Files.createDirectories(metaDir(topic))
+    if (Files.exists(segmentsFile(topic)))
+      RetiredFiles.retire(retiredLog(topic), liveFiles(topic)
+        .map(_.getFileName.toString).diff(files.map(_.getFileName.toString)))
     val tmp = metaDir(topic).resolve("segments.tmp")
     Files.writeString(tmp,
       (Seq(EventLog.CursorLine + cursor.encoded) ++
@@ -260,7 +267,7 @@ final class EventLog(val root: Path, spark: SparkSession) {
       // orphans (cursor untouched, so no (lsn,id) was ever visible)
       val live = ensureManifest(topic)
       val stage = topicDir(topic).resolve("_graft_stage_append")
-      if (Files.exists(stage)) deleteRecursively(stage)
+      FileTree.delete(stage)
       staged.join(broadcast(offDf), col("_p") === col("_p2"))
         .select(
           (lit(base) + col("_off") +
@@ -276,8 +283,9 @@ final class EventLog(val root: Path, spark: SparkSession) {
       }
       val next = Cursor(lsn, base + n)
       // ONE commit point: files + cursor land in the same manifest rename
+      FaultPoints.hit(FaultPoints.EventLogAppend)
       writeSegments(topic, live ++ moved, next)
-      deleteRecursively(stage)
+      FileTree.delete(stage)
       next
     } finally { if (!deterministicInput) staged.unpersist(); () }
   }
@@ -432,7 +440,7 @@ final class EventLog(val root: Path, spark: SparkSession) {
     val oldFiles = ensureManifest(topic)
     if (oldFiles.isEmpty) return
     val stage = dir.resolve("_graft_compact_tmp")
-    if (Files.exists(stage)) deleteRecursively(stage)
+    FileTree.delete(stage)
     read(topic)
       .repartitionByRange(targetFiles, col("lsn"), col("id"))
       .sortWithinPartitions(col("lsn"), col("id"))
@@ -443,44 +451,43 @@ final class EventLog(val root: Path, spark: SparkSession) {
       Files.move(f, t)
       t
     }
+    FaultPoints.hit(FaultPoints.EventLogCompact)
     writeSegments(topic, moved, currentCursor(topic))
-    deleteRecursively(stage)
+    FileTree.delete(stage)
   }
 
   /** Reclaim disk from files no committed reader can reach: parquet files
     * in the topic dir that are NOT in the manifest (superseded compaction
-    * generations, truncated segments, crash orphans) and are older than
-    * `graceMs`. The grace window covers plans resolved against a previous
-    * manifest that are still executing — size it to the longest-running
-    * read (the lakehouse vacuum-retention contract). Returns the number of
-    * files deleted. */
+    * generations, truncated segments, crash orphans) and left it (or, if
+    * never listed, were written) more than `graceMs` ago — a superseded
+    * file ages from its retirement ([[RetiredFiles]]), not its creation.
+    * The grace window covers plans resolved against a previous manifest
+    * that are still executing — size it to the longest-running read (the
+    * lakehouse vacuum-retention contract). Returns the number of files
+    * deleted. */
   def vacuum(topic: String, graceMs: Long = 0L): Int = writeLock(topic).synchronized {
     val dir = topicDir(topic)
     if (!Files.isDirectory(dir)) return 0
     val live = ensureManifest(topic).map(_.getFileName.toString).toSet
     val cutoff = System.currentTimeMillis() - graceMs
+    val retired = RetiredFiles.read(retiredLog(topic))
     val dead = listParquet(dir).filter { f =>
-      !live.contains(f.getFileName.toString) &&
-        Files.getLastModifiedTime(f).toMillis <= cutoff
+      val n = f.getFileName.toString
+      !live.contains(n) && RetiredFiles.since(retired, n, f) <= cutoff
     }
     dead.foreach(Files.delete)
+    RetiredFiles.forget(retiredLog(topic),
+      dead.map(_.getFileName.toString).filter(retired.contains))
     // stale staging dirs (crashed append/compact) age out the same way
     Seq("_graft_stage_append", "_graft_compact_tmp").foreach { n =>
       val s = dir.resolve(n)
       if (Files.isDirectory(s) && Files.getLastModifiedTime(s).toMillis <= cutoff)
-        deleteRecursively(s)
+        FileTree.delete(s)
     }
     // a legacy _SUCCESS marker from the pre-manifest direct-append layout
     val succ = dir.resolve("_SUCCESS")
     if (Files.isRegularFile(succ)) Files.delete(succ)
     dead.size
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(p)
-    try s.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.foreach(Files.delete)
-    finally s.close()
   }
 
   /** Number of parquet segment files in a topic (compaction observability). */

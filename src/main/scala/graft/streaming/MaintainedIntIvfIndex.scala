@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,7 +16,7 @@ import graft.operators.{IntIvfIndex, IntegerKMeans, IvfAdc}
   * index, but code-for-code (StreamingRetrievalSpec pins it, replay
   * included).
   *
-  * Exactly-once is the [[MaintainedVectorIndex]] StatsView discipline:
+  * Exactly-once is the [[MaintainedIndex]] protocol:
   * vectors partition by (batch, cluster), each micro-batch writes only
   * its own `batch=<id>` partitions via dynamic partition overwrite
   * (assignment and codes are pure functions of the frozen quantizers, so
@@ -31,13 +31,17 @@ import graft.operators.{IntIvfIndex, IntegerKMeans, IvfAdc}
   * rewrites survivors under the same (batch, cluster) layout. vec_ids
   * must be unique across the stream's life (the IncrementalDedup
   * contract). */
-final class MaintainedIntIvfIndex(path: Path, spark: SparkSession) {
-  private val proj = new EosProjection(path.resolve("eos"))
-  private def vecsDir = path.resolve("vectors")
-  private def tombDir = path.resolve("tombstones")
-  private def artDir = path.resolve("quantizers").toString
+final class MaintainedIntIvfIndex(path: Path, spark: SparkSession)
+    extends MaintainedIndex(path, spark, idCol = "vec_id", streamDeletes = false) {
+  import MaintainedIndex.DataDir
 
-  def lastCommitted: Long = proj.lastCommitted
+  // the frozen quantizer artifacts live OUTSIDE the data dir, so
+  // compact() and vacuum() never touch them
+  private val vectors = DataDir("vectors", Seq("batch", "cluster"),
+    _.repartition(col("cluster")))
+  private def artDir = path.resolve("quantizers").toString
+  private[graft] def kind = "stream-intivf"
+  private[graft] def dataDirs = Seq(vectors)
 
   /** Train and freeze the quantizers from a bootstrap corpus — runs ONCE
     * before the stream starts (the IntIvfIndex.materializeAdc training
@@ -69,91 +73,26 @@ final class MaintainedIntIvfIndex(path: Path, spark: SparkSession) {
   /** foreachBatch body — attach via `writeStream.foreachBatch(idx.update _)`.
     * `batch` needs columns (vec_id, embedding). */
   def update(batch: DataFrame, batchId: Long): Unit =
-    proj.foreachBatch { (df, id, stage) =>
-      graft.GraftExtensions.register(spark)
-      CompactSwap.requireQuiescent(compactMarker)
+    commitBatch(batch, batchId) { (df, id, stage) =>
       val cents = IntIvfIndex.loadCentroids(spark, artDir)
       val (cb, dSub, _) = IntIvfIndex.loadPq(spark, artDir)
       val pts = IntegerKMeans.quantize(df.select(col("vec_id"), col("embedding")))
-      IntegerKMeans.assign(pts, cents, keep = Seq("qv"))
+      writeBatch(IntegerKMeans.assign(pts, cents, keep = Seq("qv"))
         .select(col("vec_id"), col("qv"),
           IntegerKMeans.subCodes(cb, dSub, IvfAdc.residualCol(cents)).as("codes"),
-          col("cluster"))
-        .withColumn("batch", lit(id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "cluster")
-        .parquet(vecsDir.toString)
+          col("cluster")), vectors, id)
       df.agg(count(lit(1)).as("n_vecs"))
         .write.parquet(stage.resolve("manifest").toString)
-      ()
-    }(batch, batchId)
+    }
 
   /** Delete vectors from the maintained index — exact out-of-band mask
     * (see class doc). Idempotent; never-indexed ids are no-ops. */
   def delete(ids: DataFrame): Unit =
-    ids.select(col(ids.columns.head).cast("long").as("vec_id")).distinct()
-      .write.mode("append").parquet(tombDir.toString)
-
-  private def maskedCorpus(df: DataFrame): DataFrame =
-    if (!Files.exists(tombDir)) df
-    else df.join(
-      spark.read.parquet(tombDir.toString).select(col("vec_id")).distinct(),
-      Seq("vec_id"), "left_anti")
+    addTombstones(ids.select(col(ids.columns.head).cast("long").as("vec_id")))
 
   /** Physically drop tombstoned vectors under the same (batch, cluster)
-    * layout — surviving rows keep their batch ids so probe gating is
-    * untouched (the [[MaintainedVectorIndex.vacuum]] full-overwrite
-    * rationale: dynamic per-partition overwrite would leave fully-
-    * tombstoned partitions' old files in place). */
-  def vacuum(): Unit = {
-    if (!Files.exists(tombDir)) return
-    val kept = maskedCorpus(spark.read.parquet(vecsDir.toString)
-        .select(col("vec_id"), col("qv"), col("codes"), col("batch"), col("cluster")))
-      .localCheckpoint(true)
-    kept.write.mode("overwrite")
-      .partitionBy("batch", "cluster")
-      .parquet(vecsDir.toString)
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(tombDir)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(Files.delete)
-    finally s.close()
-  }
-
-  // ---------------------------------------------------------------------
-  // Layout maintenance — the [[MaintainedShingleIndex.compact]] protocol
-  // on the (batch, cluster) layout. The frozen quantizer artifacts live
-  // OUTSIDE vecsDir and are untouched by the fold.
-
-  private def compactMarker = path.resolve("_compact_staged")
-  private def compactSwaps = Seq(vecsDir -> path.resolve("vectors_compact"))
-
-  /** Fold every committed (batch, cluster) partition — tombstone-masked —
-    * into a single `batch=0` base; gate/EOS untouched, probes identical,
-    * applied tombstones clear, staged-marker crash protocol — see
-    * [[MaintainedVectorIndex.compact]]. */
-  def compact(): Unit = compact(failAfterStage = false)
-
-  private[graft] def compact(failAfterStage: Boolean): Unit = {
-    CompactSwap.recover(compactMarker, compactSwaps, Seq(tombDir))
-    val last = proj.lastCommitted
-    if (last < 0 || !Files.exists(vecsDir)) return
-    // idempotent fast path (the post-recover retry must not re-fold)
-    if (CompactSwap.batchIds(vecsDir) == Seq(0L) && !Files.exists(tombDir))
-      return
-    val Seq((_, staged)) = compactSwaps
-    CompactSwap.deleteRec(staged)
-    maskedCorpus(spark.read.parquet(vecsDir.toString)
-        .filter(col("batch") <= last)
-        .select(col("vec_id"), col("qv"), col("codes"), col("cluster")))
-      .repartition(col("cluster")).withColumn("batch", lit(0L))
-      .write.partitionBy("batch", "cluster").parquet(staged.toString)
-    Files.createFile(compactMarker)
-    if (failAfterStage)
-      throw new IllegalStateException("injected crash before the compact swap")
-    CompactSwap.roll(compactMarker, compactSwaps, Seq(tombDir))
-  }
+    * layout ([[MaintainedIndex.dropTombstoned]]). */
+  def vacuum(): Unit = dropTombstoned()
 
   /** IVFADC top-k per query against the committed index state — the
     * [[IntIvfIndex.probeAdc]] algebra over the batch-gated, cell-pruned,
@@ -162,23 +101,22 @@ final class MaintainedIntIvfIndex(path: Path, spark: SparkSession) {
   def probeAdc(queries: DataFrame, nprobe: Int, k: Int, shortlist: Int,
       allowed: Option[DataFrame] = None): DataFrame = {
     graft.GraftExtensions.register(spark)
-    CompactSwap.requireQuiescent(compactMarker)
-    val last = proj.lastCommitted
-    if (last < 0 || !Files.exists(vecsDir))
-      return queries.select(col("query_id").cast("long").as("query_id"),
+    committed(vectors) match {
+      case None => queries.select(col("query_id").cast("long").as("query_id"),
         lit(0L).as("neighbor_id"), lit(0L).as("d2"), lit(0L).as("rnk")).limit(0)
-    val cents = IntIvfIndex.loadCentroids(spark, artDir)
-    val (cb, dSub, kc) = IntIvfIndex.loadPq(spark, artDir)
-    val qpts = IntegerKMeans.quantize(
-      queries.select(col("query_id").as("vec_id"), col("embedding")))
-    val allow = allowed.map(a =>
-      a.select(col(a.columns.head).cast("long").as("vec_id")).distinct())
-    IntIvfIndex.probeAdcCore(spark, cents, cb, dSub, kc, qpts,
-      nprobe, k, shortlist,
-      cells => {
-        val scan = maskedCorpus(spark.read.parquet(vecsDir.toString)
-          .filter(col("batch") <= last && col("cluster").isin(cells: _*)))
-        allow.fold(scan)(a => scan.join(a, Seq("vec_id"), "left_semi"))
-      })
+      case Some(all) =>
+        val cents = IntIvfIndex.loadCentroids(spark, artDir)
+        val (cb, dSub, kc) = IntIvfIndex.loadPq(spark, artDir)
+        val qpts = IntegerKMeans.quantize(
+          queries.select(col("query_id").as("vec_id"), col("embedding")))
+        val allow = allowed.map(a =>
+          a.select(col(a.columns.head).cast("long").as("vec_id")).distinct())
+        IntIvfIndex.probeAdcCore(spark, cents, cb, dSub, kc, qpts,
+          nprobe, k, shortlist,
+          cells => {
+            val scan = all.filter(col("cluster").isin(cells: _*))
+            allow.fold(scan)(a => scan.join(a, Seq("vec_id"), "left_semi"))
+          })
+    }
   }
 }

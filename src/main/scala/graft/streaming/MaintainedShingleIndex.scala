@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,21 +11,13 @@ import graft.queries.CrossHash.shingleHashes
 /** Continuously-maintained corpus shingle index over a DOCUMENT stream —
   * the marker-less streaming fold of the dedup/novelty surface that the
   * single-commit [[ShingleIndex]] layout unblocks (the
-  * [[MaintainedBm25Index]] discipline applied to dedup):
-  *
-  *  - pairs and per-doc counts are partitioned by `batch` and each
-  *    micro-batch writes ONLY its own `batch=<id>` partitions via dynamic
-  *    partition overwrite — a re-run after a crash rewrites the identical
-  *    partitions (the batch content is deterministic), so both writes are
-  *    idempotent per batch id; batch doc ids are disjoint (the
-  *    IncrementalDedup contract), so per-batch count partitions union to
-  *    the corpus counts with no merge step;
-  *  - the cumulative tombstone set is staged and committed ATOMICALLY
-  *    with the [[EosProjection]] batch marker;
-  *  - readers gate on the marker: [[probe]] / [[noveltyProbe]] /
-  *    [[containmentProbe]] read `batch <= lastCommitted` — orphan
-  *    partitions from a crashed attempt are invisible until their batch
-  *    commits.
+  * [[MaintainedBm25Index]] discipline applied to dedup). The
+  * [[MaintainedIndex]] protocol — per-batch gated writes, marker-gated
+  * reads, the cumulative tombstone set committed with the batch marker,
+  * the staged compact — over two `batch`-partitioned dirs: pairs and
+  * per-doc counts. Batch doc ids are disjoint (the IncrementalDedup
+  * contract), so per-batch count partitions union to the corpus counts
+  * with no merge step.
   *
   * STREAM-CARRIED takedowns: a row with `op = 'del'` removes a
   * previously-committed doc from every probe exactly (the cumulative
@@ -42,111 +34,35 @@ import graft.queries.CrossHash.shingleHashes
   * the standing mass is the append-only partitioned pairs dir; probes
   * carry the [[ShingleIndex.probeFrames]] shapes (candidates broadcast
   * against the counts side, never the reverse). */
-final class MaintainedShingleIndex(path: Path, spark: SparkSession) {
-  private val proj = new EosProjection(path.resolve("eos"))
-  private def pairsDir = path.resolve("pairs")
-  private def countsDir = path.resolve("counts")
+final class MaintainedShingleIndex(path: Path, spark: SparkSession)
+    extends MaintainedIndex(path, spark, idCol = "doc_id", streamDeletes = true) {
+  import MaintainedIndex.DataDir
 
-  def lastCommitted: Long = proj.lastCommitted
-
-  /** CUMULATIVE tombstone set as of committed batch `id` — rides the
-    * per-batch snapshot dir, so a delete commits atomically with the
-    * batch marker. Batches from before a first delete have no tombstone
-    * file → empty. */
-  private def tombstones(id: Long): Option[DataFrame] = {
-    val p = path.resolve(s"eos/batch-$id/tombstones")
-    if (id < 0 || !Files.exists(p)) None
-    else Some(spark.read.parquet(p.toString))
-  }
-
-  /** A partitioned dir holds readable data only once some batch actually
-    * wrote rows (a pure-del first batch writes no parquet files — reading
-    * the bare dir would fail schema inference). */
-  private def hasData(dir: Path): Boolean =
-    Files.exists(dir) && {
-      val s = Files.list(dir)
-      try s.anyMatch(p => p.getFileName.toString.startsWith("batch="))
-      finally s.close()
-    }
-
-  private def emptyPairs =
-    spark.range(0).select(col("id").as("doc_id"), col("id").as("h"))
-  private def emptyCounts =
-    spark.range(0).select(col("id").as("doc_id"), col("id").as("n"))
+  private val pairs = DataDir("pairs", Seq("batch"), _.repartition(32, col("h")))
+  private val counts = DataDir("counts", Seq("batch"))
+  private[graft] def kind = "stream-shingle"
+  private[graft] def dataDirs = Seq(pairs, counts)
 
   /** The committed, tombstone-masked corpus pair frame (doc_id, h). */
-  private def committedPairs: DataFrame = {
-    CompactSwap.requireQuiescent(compactMarker)
-    val last = proj.lastCommitted
-    val base = if (last < 0 || !hasData(pairsDir)) emptyPairs
-      else spark.read.parquet(pairsDir.toString)
-        .filter(col("batch") <= last).drop("batch")
-    mask(base, last)
-  }
+  private def committedPairs: DataFrame = committed(pairs).getOrElse(
+    spark.range(0).select(col("id").as("doc_id"), col("id").as("h")))
 
-  private def committedCounts: DataFrame = {
-    CompactSwap.requireQuiescent(compactMarker)
-    val last = proj.lastCommitted
-    val base = if (last < 0 || !hasData(countsDir)) emptyCounts
-      else spark.read.parquet(countsDir.toString)
-        .filter(col("batch") <= last).drop("batch")
-    mask(base, last)
-  }
-
-  private def mask(df: DataFrame, last: Long): DataFrame = tombstones(last) match {
-    case None => df
-    case Some(t) => df.join(t.select(col("doc_id")), Seq("doc_id"), "left_anti")
-  }
+  private def committedCounts: DataFrame = committed(counts).getOrElse(
+    spark.range(0).select(col("id").as("doc_id"), col("id").as("n")))
 
   /** foreachBatch body — attach via `writeStream.foreachBatch(idx.update _)`.
     * `batch` needs columns (doc_id, text) and optionally `op`
-    * ('add' | 'del'). A doc_id may not appear as add and del in the SAME
-    * batch (fail-fast — intra-batch ordering is undefined); already-
-    * deleted and never-indexed del ids are no-ops. Replays skip whole
-    * (G4). */
+    * ('add' | 'del') — the [[MaintainedIndex.commitOps]] contract. */
   def update(batch: DataFrame, batchId: Long): Unit =
-    proj.foreachBatch { (df, id, stage) =>
-      graft.GraftExtensions.register(spark)
-      CompactSwap.requireQuiescent(compactMarker)
-      val hasOp = df.columns.contains("op")
-      val adds = if (hasOp) df.filter(col("op") === "add") else df
-      val delsReq = if (hasOp) df.filter(col("op") === "del")
-          .select(col("doc_id")).distinct()
-        else df.select(col("doc_id")).limit(0)
-      if (hasOp) {
-        require(adds.join(delsReq, Seq("doc_id"), "left_semi").isEmpty,
-          "a doc_id appears as both add and del in one batch — " +
-            "intra-batch ordering is undefined; split the request across batches")
-        val badOp = df.filter(!col("op").isin("add", "del")).limit(1).collect()
-        require(badOp.isEmpty, s"unknown op '${badOp.headOption.map(_.getAs[String]("op"))
-          .getOrElse("")}' — ops are 'add' | 'del'")
-      }
-      val prev = proj.lastCommitted
-      val prevTombs = tombstones(prev)
-      // fresh guard: already-tombstoned ids are no-ops (idempotent
-      // re-request; the REPLAY case never reaches here — G4 skips it)
-      val dels = prevTombs match {
-        case None => delsReq
-        case Some(t) => delsReq.join(t, Seq("doc_id"), "left_anti")
-      }
+    commitOps(batch, batchId) { (adds, _, id, _) =>
       val psh = adds
         .select(col("doc_id"), explode(shingleHashes(col("text"))).as("h"))
         .distinct().cache()
-      psh.withColumn("batch", lit(id))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch").parquet(pairsDir.toString)
-      psh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-        .withColumn("batch", lit(id))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch").parquet(countsDir.toString)
-      // cumulative tombstones: prev ∪ this batch's fresh dels
-      (prevTombs match {
-        case None => dels
-        case Some(t) => t.select(col("doc_id")).unionByName(dels).distinct()
-      }).write.parquet(stage.resolve("tombstones").toString)
+      writeBatch(psh, pairs, id)
+      writeBatch(psh.groupBy(col("doc_id")).agg(count(lit(1)).as("n")), counts, id)
       psh.unpersist()
       ()
-    }(batch, batchId)
+    }
 
   /** Near-dup pairs of a NEW probe batch vs the committed corpus (plus
     * within the probe batch) — [[ShingleIndex.probe]] over the streamed
@@ -179,59 +95,5 @@ final class MaintainedShingleIndex(path: Path, spark: SparkSession) {
   def spanKeepFirstProbe(batch: DataFrame): DataFrame = {
     graft.GraftExtensions.register(spark)
     ShingleIndex.spanKeepFirstFrames(spark, committedPairs, batch)
-  }
-
-  // ---------------------------------------------------------------------
-  // Layout maintenance
-
-  private def compactMarker = path.resolve("_compact_staged")
-  private def compactSwaps = Seq(
-    pairsDir -> path.resolve("pairs_compact"),
-    countsDir -> path.resolve("counts_compact"))
-  private def compactDrops(last: Long) =
-    Seq(path.resolve(s"eos/batch-$last/tombstones"))
-
-  /** Fold every committed batch partition (tombstone-masked) into a
-    * single `batch=0` base — the [[graft.operators.ShingleIndex.compact]]
-    * doctrine on the streamed layout: a continuous feed adds one
-    * partition per micro-batch forever, and with no takedown ever filed
-    * nothing else bounds the partition count a probe lists. `batch=0` is
-    * ≤ every committed marker, so the folded base stays visible to the
-    * gated readers; the EOS state is untouched, so the next micro-batch
-    * id continues from the checkpoint and replays still skip whole (G4).
-    * Applied tombstones drop with the fold (a re-requested del of a
-    * folded-away id re-tombstones an absent doc — a no-op, the
-    * already-deleted contract). Probes identical before/after
-    * (MaintainedShingleIndexSpec pins it through a crashed swap).
-    *
-    * Quiescent-stream contract: run between triggers (stop the query or
-    * schedule in a maintenance window). The swap is the staged-marker
-    * protocol ([[CompactSwap]]): a crash before the marker loses nothing;
-    * after it, probes/updates fail loud until the next compact() rolls
-    * the swap forward. */
-  def compact(): Unit = compact(failAfterStage = false)
-
-  /** `failAfterStage` is the spec's crash seam: throw after the staged
-    * dirs + marker land but before the swap — the widest window. */
-  private[graft] def compact(failAfterStage: Boolean): Unit = {
-    val last = proj.lastCommitted
-    CompactSwap.recover(compactMarker, compactSwaps, compactDrops(last))
-    if (last < 0) return
-    // idempotent fast path — in particular the retry right after recover
-    // rolled a crashed swap forward: already single-base with no
-    // tombstone snapshot left to apply means there is nothing to fold
-    if (CompactSwap.batchIds(pairsDir) == Seq(0L) &&
-        CompactSwap.batchIds(countsDir) == Seq(0L) &&
-        !Files.exists(path.resolve(s"eos/batch-$last/tombstones"))) return
-    val Seq((_, sp), (_, sc)) = compactSwaps
-    CompactSwap.deleteRec(sp); CompactSwap.deleteRec(sc)
-    committedPairs.repartition(32, col("h")).withColumn("batch", lit(0L))
-      .write.partitionBy("batch").parquet(sp.toString)
-    committedCounts.withColumn("batch", lit(0L))
-      .write.partitionBy("batch").parquet(sc.toString)
-    Files.createFile(compactMarker)
-    if (failAfterStage)
-      throw new IllegalStateException("injected crash before the compact swap")
-    CompactSwap.roll(compactMarker, compactSwaps, compactDrops(last))
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -9,24 +9,13 @@ import org.apache.spark.sql.functions._
 import graft.operators.VectorIndex
 
 /** Continuously-maintained ANN vector index over an EMBEDDING stream —
-  * the vector twin of [[MaintainedBm25Index]], with the same StatsView
-  * exactly-once discipline:
-  *
-  *  - vectors are partitioned by (batch, bucket) and each micro-batch
-  *    writes ONLY its own `batch=<id>` partitions via dynamic partition
-  *    overwrite — a re-run after a crash rewrites the identical
-  *    partitions (the batch content is deterministic, and the
-  *    hyperplane buckets are data-independent so every attempt agrees
-  *    on the layout), making the write idempotent per batch id;
-  *  - the index is SIDE-TABLE-FREE (a probe needs only the bucketed
-  *    vectors — no vocabulary or stats merge), so the staged artifact
-  *    is just a 1-row batch manifest (n_vecs) committed atomically with
-  *    the [[EosProjection]] marker;
-  *  - readers gate on the marker: [[probe]] scans
-  *    `batch <= lastCommitted` restricted to the probed bucket
-  *    partitions — orphan partitions from a crashed attempt stay
-  *    invisible until their batch commits (the EventLog
-  *    manifest-gated-reader pattern applied to the index).
+  * the vector twin of [[MaintainedBm25Index]]: the [[MaintainedIndex]]
+  * protocol over (batch, bucket)-partitioned vectors (the hyperplane
+  * buckets are data-independent, so every attempt of a batch agrees on
+  * the layout). The index is SIDE-TABLE-FREE — a probe needs only the
+  * bucketed vectors — so the staged artifact is a 1-row batch manifest
+  * (n_vecs), and deletes are out-of-band tombstones; [[probe]] scans only
+  * the probed bucket partitions.
   *
   * Probes equal a from-scratch [[VectorIndex.materialize]] + probe over
   * the union of all delivered vectors (StreamingRetrievalSpec pins it,
@@ -34,12 +23,14 @@ import graft.operators.VectorIndex
   * id and cosine ranking is order-free. vec_ids must be unique across
   * the stream's life (the IncrementalDedup contract). */
 final class MaintainedVectorIndex(path: Path, spark: SparkSession,
-    bits: Int = 4, dim: Int = 64) {
-  private val proj = new EosProjection(path.resolve("eos"))
-  private def vecsDir = path.resolve("vectors")
-  private def tombDir = path.resolve("tombstones")
+    bits: Int = 4, dim: Int = 64)
+    extends MaintainedIndex(path, spark, idCol = "vec_id", streamDeletes = false) {
+  import MaintainedIndex.DataDir
 
-  def lastCommitted: Long = proj.lastCommitted
+  private val vectors = DataDir("vectors", Seq("batch", "bucket"),
+    _.repartition(col("bucket")))
+  private[graft] def kind = "stream-vector"
+  private[graft] def dataDirs = Seq(vectors)
 
   /** Delete vectors from the maintained index — the right-to-be-
     * forgotten path works on the STREAMING artifact too because this
@@ -52,92 +43,21 @@ final class MaintainedVectorIndex(path: Path, spark: SparkSession,
     * the stream itself as `op = 'del'` rows, committing the side-table
     * decrement atomically with the batch marker.) */
   def delete(ids: DataFrame): Unit =
-    ids.select(col(ids.columns.head).as("vec_id")).distinct()
-      .write.mode("append").parquet(tombDir.toString)
+    addTombstones(ids.select(col(ids.columns.head).as("vec_id")))
 
-  private def maskedCorpus(df: DataFrame): DataFrame =
-    if (!Files.exists(tombDir)) df
-    else df.join(
-      spark.read.parquet(tombDir.toString).select(col("vec_id")).distinct(),
-      Seq("vec_id"), "left_anti")
-
-  /** Physically drop tombstoned vectors: a full masked rewrite under the
-    * same (batch, bucket) partitioning — surviving rows keep their batch
-    * ids, so the `batch <= lastCommitted` probe gating is untouched, and
-    * a partition whose every row was tombstoned disappears entirely
-    * (dynamic per-partition overwrite would silently leave such
-    * partitions' old files in place). EAGER localCheckpoint pins the
-    * surviving rows before the overwrite (the VectorIndex.vacuum
-    * discipline). */
-  def vacuum(): Unit = {
-    if (!Files.exists(tombDir)) return
-    val kept = maskedCorpus(spark.read.parquet(vecsDir.toString)
-        .select(col("vec_id"), col("v"), col("batch"), col("bucket")))
-      .localCheckpoint(true)
-    kept.write.mode("overwrite")
-      .partitionBy("batch", "bucket")
-      .parquet(vecsDir.toString)
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(tombDir)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(Files.delete)
-    finally s.close()
-  }
-
-  // ---------------------------------------------------------------------
-  // Layout maintenance — the [[MaintainedShingleIndex.compact]] protocol.
-
-  private def compactMarker = path.resolve("_compact_staged")
-  private def compactSwaps = Seq(vecsDir -> path.resolve("vectors_compact"))
-
-  /** Fold every committed (batch, bucket) partition — tombstone-masked —
-    * into a single `batch=0` base: a continuous feed adds one batch
-    * partition per micro-batch forever, and nothing else bounds the
-    * partition count a bucket-pruned probe lists. `batch=0` stays under
-    * the `batch <= lastCommitted` gate; EOS state untouched; applied
-    * tombstones clear with the fold (re-requested deletes of folded-away
-    * ids are no-ops). Staged-marker crash protocol ([[CompactSwap]]):
-    * probes/updates fail loud mid-swap until the next compact rolls
-    * forward. Quiescent-stream contract, like [[vacuum]]. */
-  def compact(): Unit = compact(failAfterStage = false)
-
-  private[graft] def compact(failAfterStage: Boolean): Unit = {
-    CompactSwap.recover(compactMarker, compactSwaps, Seq(tombDir))
-    val last = proj.lastCommitted
-    if (last < 0 || !Files.exists(vecsDir)) return
-    // idempotent fast path (the post-recover retry must not re-fold)
-    if (CompactSwap.batchIds(vecsDir) == Seq(0L) && !Files.exists(tombDir))
-      return
-    val Seq((_, staged)) = compactSwaps
-    CompactSwap.deleteRec(staged)
-    maskedCorpus(spark.read.parquet(vecsDir.toString)
-        .filter(col("batch") <= last)
-        .select(col("vec_id"), col("v"), col("bucket")))
-      .repartition(col("bucket")).withColumn("batch", lit(0L))
-      .write.partitionBy("batch", "bucket").parquet(staged.toString)
-    Files.createFile(compactMarker)
-    if (failAfterStage)
-      throw new IllegalStateException("injected crash before the compact swap")
-    CompactSwap.roll(compactMarker, compactSwaps, Seq(tombDir))
-  }
+  /** Physically drop tombstoned vectors under the same (batch, bucket)
+    * partitioning ([[MaintainedIndex.dropTombstoned]]). */
+  def vacuum(): Unit = dropTombstoned()
 
   /** foreachBatch body — attach via `writeStream.foreachBatch(idx.update _)`.
     * `batch` needs columns (vec_id, embedding). */
   def update(batch: DataFrame, batchId: Long): Unit =
-    proj.foreachBatch { (df, id, stage) =>
-      graft.GraftExtensions.register(spark)
-      CompactSwap.requireQuiescent(compactMarker)
-      df.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .withColumn("bucket", VectorIndex.bucketCol(col("v"), bits, dim))
-        .withColumn("batch", lit(id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "bucket")
-        .parquet(vecsDir.toString)
+    commitBatch(batch, batchId) { (df, id, stage) =>
+      writeBatch(df.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+        .withColumn("bucket", VectorIndex.bucketCol(col("v"), bits, dim)), vectors, id)
       df.agg(count(lit(1)).as("n_vecs"))
         .write.parquet(stage.resolve("manifest").toString)
-      ()
-    }(batch, batchId)
+    }
 
   /** Top-k cosine neighbors per query vector against the committed index
     * state — bucket-partition-pruned like the static probe (multi-probe
@@ -146,26 +66,25 @@ final class MaintainedVectorIndex(path: Path, spark: SparkSession,
     * (query_id, embedding). */
   def probe(queries: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
     graft.GraftExtensions.register(spark)
-    CompactSwap.requireQuiescent(compactMarker)
-    val last = proj.lastCommitted
-    if (last < 0 || !Files.exists(vecsDir))
-      return queries.select(col("query_id"), lit(0L).as("rnk"),
+    committed(vectors) match {
+      case None => queries.select(col("query_id"), lit(0L).as("rnk"),
         lit(0L).as("neighbor_id"), lit(0.0).as("cosine")).limit(0)
-    val (q, probes, buckets) =
-      VectorIndex.queryProbes(spark, queries, bits, dim, nprobe)
-    val corpus = maskedCorpus(spark.read.parquet(vecsDir.toString)
-        .filter(col("batch") <= last && col("bucket").isin(buckets: _*)))
-      .select(col("vec_id").as("neighbor_id"), col("bucket"),
-        col("v").as("cv"), sqrt(expr("graft_dot(v, v)")).as("cnrm"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    broadcast(probes.join(q.select(col("query_id"), col("qv"), col("qnrm")), "query_id"))
-      .join(corpus, Seq("bucket"))
-      .withColumn("cosine",
-        expr("graft_dot(qv, cv)") / nullif(col("qnrm") * col("cnrm"), lit(0.0)))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("rnk").cast("long").as("rnk"),
-        col("neighbor_id"), col("cosine"))
+      case Some(all) =>
+        val (q, probes, buckets) =
+          VectorIndex.queryProbes(spark, queries, bits, dim, nprobe)
+        val corpus = all.filter(col("bucket").isin(buckets: _*))
+          .select(col("vec_id").as("neighbor_id"), col("bucket"),
+            col("v").as("cv"), sqrt(expr("graft_dot(v, v)")).as("cnrm"))
+        val w = Window.partitionBy(col("query_id"))
+          .orderBy(col("cosine").desc, col("neighbor_id"))
+        broadcast(probes.join(q.select(col("query_id"), col("qv"), col("qnrm")), "query_id"))
+          .join(corpus, Seq("bucket"))
+          .withColumn("cosine",
+            expr("graft_dot(qv, cv)") / nullif(col("qnrm") * col("cnrm"), lit(0.0)))
+          .withColumn("rnk", row_number().over(w))
+          .filter(col("rnk") <= k)
+          .select(col("query_id"), col("rnk").cast("long").as("rnk"),
+            col("neighbor_id"), col("cosine"))
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -62,110 +62,60 @@ object StreamingRetrieval {
 }
 
 /** Continuously-maintained BM25 index over a DOCUMENT stream — the
-  * index-maintenance twin of [[StreamingRetrieval]]'s serving path, with
-  * the StatsView exactly-once discipline:
-  *
-  *  - postings are partitioned by (batch, bucket) and each micro-batch
-  *    writes ONLY its own `batch=<id>` partitions via dynamic partition
-  *    overwrite — a re-run after a crash rewrites the identical
-  *    partitions (the batch content is deterministic), so the postings
-  *    write is idempotent per batch id;
-  *  - the vocabulary-sized df table and 1-row stats merge
-  *    (previous-committed ⊎ delta) are staged and committed ATOMICALLY
-  *    with the [[EosProjection]] batch marker;
-  *  - readers gate on the marker: [[probe]] reads postings with
-  *    `batch <= lastCommitted` (partition-pruned) and the side tables of
-  *    the last committed batch — orphan partitions from a crashed
-  *    attempt are invisible until their batch commits (the EventLog
-  *    manifest-gated-reader pattern applied to the index).
+  * index-maintenance twin of [[StreamingRetrieval]]'s serving path: the
+  * [[MaintainedIndex]] protocol over (batch, bucket)-partitioned
+  * postings, plus the vocabulary-sized df table and 1-row stats merge
+  * (previous-committed ⊎ delta) staged and committed ATOMICALLY with the
+  * batch marker; [[probe]] reads the side tables of the last committed
+  * batch. The staged compact leaves every score identical: the df/stats
+  * sides were decremented EXACTLY at each delete's commit.
   *
   * Scores probe bit-identically to a batch [[Bm25Index]] built on the
   * union of all delivered documents (StreamingRetrievalSpec pins it,
   * replay included). Doc ids must be unique across the stream's life
   * (the IncrementalDedup contract). */
-final class MaintainedBm25Index(path: Path, spark: SparkSession, buckets: Int = 32) {
-  private val proj = new EosProjection(path.resolve("eos"))
-  private def postingsDir = path.resolve("postings")
+final class MaintainedBm25Index(path: Path, spark: SparkSession, buckets: Int = 32)
+    extends MaintainedIndex(path, spark, idCol = "doc_id", streamDeletes = true) {
+  import MaintainedIndex.DataDir
 
-  def lastCommitted: Long = proj.lastCommitted
+  private val postings = DataDir("postings", Seq("batch", "b"), _.repartition(col("b")))
+  private[graft] def kind = "stream-bm25"
+  private[graft] def dataDirs = Seq(postings)
 
+  /** The df table and 1-row stats of committed batch `id` — staged with
+    * the batch, so they commit atomically with its postings, and a
+    * delete's decrement with its tombstones. */
   private def sides(id: Long): Option[(DataFrame, DataFrame)] =
     if (id < 0) None
     else Some((
       spark.read.parquet(path.resolve(s"eos/batch-$id/terms").toString),
       spark.read.parquet(path.resolve(s"eos/batch-$id/stats").toString)))
 
-  /** CUMULATIVE tombstone set as of committed batch `id` — rides the same
-    * per-batch snapshot dir as terms/stats, so a delete commits
-    * atomically with the side-table decrement it implies (the small-side
-    * discipline deletes could not get out-of-band: an external commit
-    * would collide with the stream's batch-id sequence). Batches written
-    * before the delete surface existed have no tombstone file → empty. */
-  private def tombstones(id: Long): Option[DataFrame] = {
-    val p = path.resolve(s"eos/batch-$id/tombstones")
-    if (id < 0 || !Files.exists(p)) None
-    else Some(spark.read.parquet(p.toString))
-  }
-
   /** foreachBatch body — attach via `writeStream.foreachBatch(idx.update _)`.
     * `batch` needs columns (doc_id, text) and optionally `op`
-    * ('add' | 'del'): STREAM-CARRIED takedowns. A del row removes a
+    * ('add' | 'del'): STREAM-CARRIED takedowns (the
+    * [[MaintainedIndex.commitOps]] contract). A del row removes a
     * previously-committed doc exactly (per-term df decrement from one
     * id-restricted postings scan, stats subtract, cumulative tombstone
     * mask — the Bm25Index.delete algebra riding the EOS commit), so
-    * [[probe]] equals a from-scratch build on the remaining corpus.
-    * Already-deleted and never-indexed ids are no-ops; a doc_id may not
-    * appear as add and del in the SAME batch (fail-fast — the ordering
-    * inside one batch is undefined). Replays skip whole (G4). */
+    * [[probe]] equals a from-scratch build on the remaining corpus. */
   def update(batch: DataFrame, batchId: Long): Unit =
-    proj.foreachBatch { (df, id, stage) =>
-      graft.GraftExtensions.register(spark)
-      CompactSwap.requireQuiescent(compactMarker)
-      val hasOp = df.columns.contains("op")
-      val adds = if (hasOp) df.filter(col("op") === "add") else df
-      val delsReq = if (hasOp) df.filter(col("op") === "del")
-          .select(col("doc_id")).distinct()
-        else df.select(col("doc_id")).limit(0)
-      if (hasOp) {
-        require(adds.join(delsReq, Seq("doc_id"), "left_semi").isEmpty,
-          "a doc_id appears as both add and del in one batch — " +
-            "intra-batch ordering is undefined; split the request across batches")
-        val badOp = df.filter(!col("op").isin("add", "del")).limit(1).collect()
-        require(badOp.isEmpty, s"unknown op '${badOp.headOption.map(_.getAs[String]("op"))
-          .getOrElse("")}' — ops are 'add' | 'del'")
-      }
-      val prev = proj.lastCommitted
-      val prevTombs = tombstones(prev)
-      // fresh guard: already-tombstoned ids are no-ops (idempotent
-      // re-request; the REPLAY case never reaches here — G4 skips it)
-      val dels = (prevTombs match {
-        case None => delsReq
-        case Some(t) => delsReq.join(t, Seq("doc_id"), "left_anti")
-      }).cache()
-
+    commitOps(batch, batchId) { (adds, dels, id, stage) =>
+      val prev = lastCommitted
       val tok = adds.select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       val tf = tok.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")).cache()
       val dl = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      tf.join(dl, "doc_id")
-        .withColumn("b", pmod(h60(col("term")), lit(buckets.toLong)))
-        .withColumn("batch", lit(id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "b")
-        .parquet(postingsDir.toString)
+      writeBatch(tf.join(dl, "doc_id")
+        .withColumn("b", pmod(h60(col("term")), lit(buckets.toLong))), postings, id)
       // del decrements: one scan of the COMMITTED postings restricted to
       // the freshly-deleted ids (dl is denormalized per posting row)
-      val delRows =
-        if (!Files.exists(postingsDir)) dels.limit(0)
-          .select(lit("").as("term"), lit(0L).as("doc_id"), lit(0L).as("tf"), lit(0L).as("dl"))
-        else spark.read.parquet(postingsDir.toString)
-          .filter(col("batch") <= prev)
-          .join(dels, Seq("doc_id"), "left_semi")
-          .select(col("term"), col("doc_id"), col("tf"), col("dl")).cache()
+      val delRows = committed(postings, prev).fold(dels.limit(0)
+          .select(lit("").as("term"), lit(0L).as("doc_id"), lit(0L).as("tf"), lit(0L).as("dl")))(
+        _.join(dels, Seq("doc_id"), "left_semi")
+          .select(col("term"), col("doc_id"), col("tf"), col("dl")).cache())
       val delTerms = delRows.groupBy(col("term")).agg(count(lit(1)).as("ddf"))
       val delPerDoc = delRows.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
       val delStats = delPerDoc.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl"))
-
       val deltaTerms = tf.groupBy(col("term")).agg(count(lit(1)).as("dfreq"))
       val deltaStats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl"))
       val (terms, stats) = sides(prev) match {
@@ -189,89 +139,34 @@ final class MaintainedBm25Index(path: Path, spark: SparkSession, buckets: Int = 
           (coalesce(col("n_docs"), lit(0L)) - col("dn")).as("n_docs"),
           (coalesce(col("total_dl"), lit(0L)) - col("ddl")).as("total_dl"))
         .write.parquet(stage.resolve("stats").toString)
-      // cumulative tombstones: prev ∪ this batch's fresh dels
-      (prevTombs match {
-        case None => dels
-        case Some(t) => t.select(col("doc_id")).unionByName(dels).distinct()
-      }).write.parquet(stage.resolve("tombstones").toString)
-      tf.unpersist(); dels.unpersist()
+      tf.unpersist()
       ()
-    }(batch, batchId)
+    }
 
   /** BM25 scores of `qterms` (query_id, term) against the committed index
     * state — bucket-pruned like the static probe, batch-gated on the
     * marker. Empty before the first commit. */
   def probe(qterms: DataFrame): DataFrame = {
     graft.GraftExtensions.register(spark)
-    CompactSwap.requireQuiescent(compactMarker)
-    val last = proj.lastCommitted
-    val empty = qterms.select(col("query_id"), lit(0L).as("doc_id"),
-      lit(0L).as("score_scaled")).limit(0)
-    if (last < 0 || !Files.exists(postingsDir)) empty
-    else {
-      val qb = qterms.withColumn("b", pmod(h60(col("term")), lit(buckets.toLong))).cache()
-      val probed = qb.select(col("b")).distinct().collect().map(_.getLong(0)).toSeq
-      val (terms, stats) = sides(last).get
-      val committed = spark.read.parquet(postingsDir.toString)
-        .filter(col("batch") <= last && col("b").isin(probed: _*))
-      // stream-carried deletes mask before scoring (|deleted|-sized set,
-      // AQE broadcasts); the df/stats sides were decremented exactly at
-      // the delete batch's commit
-      val postings = tombstones(last) match {
-        case None => committed
-        case Some(t) => committed.join(t.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      }
-      qb.join(postings, Seq("b", "term"))
-        .join(terms, "term")
-        .crossJoin(stats) // 1 row — AQE broadcasts
-        .select(col("query_id"), col("doc_id"),
-          Bm25Index.contrib(col("tf"), col("dl"), col("dfreq"),
-            col("n_docs"), col("total_dl")).as("sc"))
-        .groupBy(col("query_id"), col("doc_id"))
-        .agg(sum(col("sc")).as("score_scaled"))
+    val last = lastCommitted
+    committed(postings, last) match {
+      case None => qterms.select(col("query_id"), lit(0L).as("doc_id"),
+        lit(0L).as("score_scaled")).limit(0)
+      case Some(all) =>
+        val qb = qterms.withColumn("b", pmod(h60(col("term")), lit(buckets.toLong))).cache()
+        val probed = qb.select(col("b")).distinct().collect().map(_.getLong(0)).toSeq
+        val (terms, stats) = sides(last).get
+        // stream-carried deletes were masked before scoring (|deleted|-
+        // sized set, AQE broadcasts); the df/stats sides were decremented
+        // exactly at the delete batch's commit
+        qb.join(all.filter(col("b").isin(probed: _*)), Seq("b", "term"))
+          .join(terms, "term")
+          .crossJoin(stats) // 1 row — AQE broadcasts
+          .select(col("query_id"), col("doc_id"),
+            Bm25Index.contrib(col("tf"), col("dl"), col("dfreq"),
+              col("n_docs"), col("total_dl")).as("sc"))
+          .groupBy(col("query_id"), col("doc_id"))
+          .agg(sum(col("sc")).as("score_scaled"))
     }
-  }
-
-  // ---------------------------------------------------------------------
-  // Layout maintenance — the [[MaintainedShingleIndex.compact]] protocol
-  // on the (batch, b) postings layout. The df/stats sides ride the EOS
-  // snapshot and were decremented EXACTLY at each delete's commit, so
-  // physically dropping the masked rows + the applied tombstone set
-  // leaves every score identical.
-
-  private def compactMarker = path.resolve("_compact_staged")
-  private def compactSwaps = Seq(postingsDir -> path.resolve("postings_compact"))
-  private def compactDrops(last: Long) =
-    Seq(path.resolve(s"eos/batch-$last/tombstones"))
-
-  /** Fold every committed (batch, b) postings partition — tombstone-
-    * masked — into a single `batch=0` base re-clustered by bucket;
-    * gate/EOS and the terms/stats sides untouched, probes score
-    * identically, staged-marker crash protocol — see
-    * [[MaintainedShingleIndex.compact]] (StreamingRetrievalSpec pins
-    * this twin). */
-  def compact(): Unit = compact(failAfterStage = false)
-
-  private[graft] def compact(failAfterStage: Boolean): Unit = {
-    val last = proj.lastCommitted
-    CompactSwap.recover(compactMarker, compactSwaps, compactDrops(last))
-    if (last < 0 || !Files.exists(postingsDir)) return
-    // idempotent fast path (the post-recover retry must not re-fold)
-    if (CompactSwap.batchIds(postingsDir) == Seq(0L) &&
-        !Files.exists(path.resolve(s"eos/batch-$last/tombstones"))) return
-    val Seq((_, staged)) = compactSwaps
-    CompactSwap.deleteRec(staged)
-    val committed = spark.read.parquet(postingsDir.toString)
-      .filter(col("batch") <= last)
-    val masked = tombstones(last) match {
-      case None => committed
-      case Some(t) => committed.join(t.select(col("doc_id")), Seq("doc_id"), "left_anti")
-    }
-    masked.drop("batch").repartition(col("b")).withColumn("batch", lit(0L))
-      .write.partitionBy("batch", "b").parquet(staged.toString)
-    Files.createFile(compactMarker)
-    if (failAfterStage)
-      throw new IllegalStateException("injected crash before the compact swap")
-    CompactSwap.roll(compactMarker, compactSwaps, compactDrops(last))
   }
 }

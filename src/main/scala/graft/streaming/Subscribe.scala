@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 import graft.store.EventLogSchema
+import graft.util.FileTree
 
 /** Unbounded subscribe (S5/S6) over the native event log, plus the
   * exactly-once projection helper (G4).
@@ -89,11 +90,11 @@ final class EosProjection(stateDir: Path) {
   def foreachBatch(effects: (DataFrame, Long, Path) => Unit)(df: DataFrame, batchId: Long): Unit = {
     if (batchId <= lastCommitted) return // replay after restart → skip (G4)
     val stage = stateDir.resolve(s"stage-$batchId")
-    if (Files.exists(stage)) deleteRecursively(stage)
+    FileTree.delete(stage)
     Files.createDirectories(stage)
     effects(df, batchId, stage)
     val committed = stateDir.resolve(s"batch-$batchId")
-    if (Files.exists(committed)) deleteRecursively(committed)
+    FileTree.delete(committed)
     Files.move(stage, committed, StandardCopyOption.ATOMIC_MOVE)
     val tmp = stateDir.resolve("last_batch.tmp")
     Files.writeString(tmp, batchId.toString)
@@ -104,13 +105,6 @@ final class EosProjection(stateDir: Path) {
   def attach(w: DataStreamWriter[org.apache.spark.sql.Row])(
       effects: (DataFrame, Long, Path) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
     w.foreachBatch(foreachBatch(effects) _)
-
-  private def deleteRecursively(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(p)
-    try s.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.foreach(Files.delete)
-    finally s.close()
-  }
 }
 
 object EosProjection {

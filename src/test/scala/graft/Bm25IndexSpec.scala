@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Bm25Index
 import graft.queries.RetrievalQueries
+import graft.util.FaultPoints
 
 /** The materialized BM25 inverted index: probing it must (a) score
   * IDENTICALLY to the from-scratch text_bm25 spelling (same shared
@@ -133,7 +134,7 @@ class Bm25IndexSpec extends AnyFunSuite {
       val preAppend = scores(incr)
       // crash at the widest window: every write done, pointer not swapped
       val boom = intercept[IllegalStateException] {
-        Bm25Index.append(batch, incr, 32, failBeforeCommit = true)
+        FaultPoints.armed(FaultPoints.Bm25Append)(Bm25Index.append(batch, incr, 32))
       }
       assert(boom.getMessage.contains("injected"))
       // the half-appended batch is INVISIBLE: probe, stats and df all

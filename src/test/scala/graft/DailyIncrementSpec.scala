@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Bm25Index, CurationJob, DailyIncrement, DsirModel, Takedown}
 import graft.queries.CorpusQueries
+import graft.util.FaultPoints
 
 /** The daily-increment path: day0 CurationJob over the corpus split +
   * one DailyIncrement over the batch split must land artifacts
@@ -500,7 +501,8 @@ class DailyIncrementSpec extends AnyFunSuite {
       // die right after the dedup-index append committed — the overlap
       // append and staging cleanup have NOT run
       val boom = intercept[IllegalStateException] {
-        DailyIncrement.applyPending(spark, crashDir, failAfter = Some("shingleidx"))
+        FaultPoints.armed(FaultPoints.incrementStep("shingleidx"))(
+          DailyIncrement.applyPending(spark, crashDir))
       }
       assert(boom.getMessage.contains("injected"))
       DailyIncrement.recover(spark, crashDir)
@@ -604,7 +606,8 @@ class DailyIncrementSpec extends AnyFunSuite {
       DailyIncrement.stage(spark, b2, embs, dir,
         graft.functions.Tokenizer.Whitespace, benchIndex = Some("graft_bi_daily"))
       val boom = intercept[IllegalStateException] {
-        DailyIncrement.applyPending(spark, dir, failAfter = Some("evalh"))
+        FaultPoints.armed(FaultPoints.incrementStep("evalh"))(
+          DailyIncrement.applyPending(spark, dir))
       }
       assert(boom.getMessage.contains("injected"))
       DailyIncrement.recover(spark, dir)
@@ -740,7 +743,8 @@ class DailyIncrementSpec extends AnyFunSuite {
       DailyIncrement.stage(spark, b2, embs, dir,
         graft.functions.Tokenizer.Whitespace, spanIndex = Some("graft_sp_daily"))
       val boom = intercept[IllegalStateException] {
-        DailyIncrement.applyPending(spark, dir, failAfter = Some("dsir"))
+        FaultPoints.armed(FaultPoints.incrementStep("dsir"))(
+          DailyIncrement.applyPending(spark, dir))
       }
       assert(boom.getMessage.contains("injected"))
       DailyIncrement.recover(spark, dir)
@@ -1159,7 +1163,8 @@ class DailyIncrementSpec extends AnyFunSuite {
       graft.functions.Tokenizer.Whitespace)
     assert(staged == clean.nBatchKept, "staged kept set != clean run's")
     val boom = intercept[IllegalStateException] {
-      DailyIncrement.applyPending(spark, crashDir, failAfter = Some("curated"))
+      FaultPoints.armed(FaultPoints.incrementStep("curated"))(
+        DailyIncrement.applyPending(spark, crashDir))
     }
     assert(boom.getMessage.contains("injected"))
     // the drift the crash creates: manifest grew, bm25 stats did not

@@ -260,6 +260,28 @@ class EventLogSpec extends AnyFunSuite {
     assert(log.saveAll("cr_events", Seq(ev(7))) == Cursor(4, 7))
   }
 
+  test("vacuum ages a superseded segment from its retirement, not its creation") {
+    val log = newLog()
+    (1 to 6).grouped(2).foreach(g => log.saveAll("vr_events", g.map(ev)))
+    val dir = log.root.resolve("vr_events")
+    val segs = new java.io.File(dir.toString).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.toPath).toSeq
+    assert(segs.size >= 3, s"one or more segment files per append, got ${segs.size}")
+    // segments written an hour ago, listed by a reader just now
+    val written = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 3600000L)
+    segs.foreach(Files.setLastModifiedTime(_, written))
+    val inFlight = log.scan("vr_events", Cursor.zero, 10)
+    log.compact("vr_events", targetFiles = 1)
+    assert(log.vacuum("vr_events", graceMs = 600000L) == 0,
+      "a generation retired moments ago was reclaimed inside the grace window")
+    assert(segs.forall(Files.exists(_)))
+    assert(inFlight.collect().map(_.getAs[Long]("id")).toSeq == (1L to 6L))
+    assert(log.vacuum("vr_events", graceMs = 0L) == segs.size)
+    assert(!segs.exists(Files.exists(_)))
+    assert(log.read("vr_events").collect().map(_.getAs[Long]("id")).sorted.toSeq == (1L to 6L))
+  }
+
   test("exportPartitioned writes a date-partitioned layout; date predicates prune at file level") {
     import org.apache.spark.sql.functions._
     val log = newLog()

@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.OverlapIndex
 import graft.queries.CorpusQueries
 import graft.streaming.MaintainedOverlapIndex
+import graft.util.FaultPoints
 
 /** The continuously-maintained positioned (overlap-run) index: streamed
   * ingestion must land EXACTLY the batch [[OverlapIndex]] state (runsProbe
@@ -150,7 +151,7 @@ class MaintainedOverlapIndexSpec extends AnyFunSuite {
     assert(Files.exists(rootA.resolve("eos/batch-1/tombstones")),
       "the stream-del should have staged a tombstone set")
 
-    intercept[IllegalStateException](a.compact(failAfterStage = true))
+    intercept[IllegalStateException](FaultPoints.armed(FaultPoints.CompactSwap)(a.compact()))
     intercept[IllegalArgumentException](a.runsProbe(evalDocs, minRun))
     a.compact()
     assert(batchParts(rootA) == Seq("batch=0"),

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ShingleIndex
 import graft.streaming.MaintainedShingleIndex
+import graft.util.FaultPoints
 
 /** The continuously-maintained shingle index: streamed ingestion must
   * land EXACTLY the batch [[ShingleIndex]] state (probe and novelty
@@ -174,7 +175,7 @@ class MaintainedShingleIndexSpec extends AnyFunSuite {
       "the stream-del should have staged a tombstone set")
 
     // crash after staging: probes/updates fail loud, the retry rolls forward
-    intercept[IllegalStateException](a.compact(failAfterStage = true))
+    intercept[IllegalStateException](FaultPoints.armed(FaultPoints.CompactSwap)(a.compact()))
     intercept[IllegalArgumentException](a.probe(probeBatch, 0.6))
     intercept[IllegalArgumentException](
       feed(a, 2L, rowsOf(350, 360)))

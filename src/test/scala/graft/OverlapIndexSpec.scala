@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.OverlapIndex
 import graft.queries.CorpusQueries
+import graft.util.FaultPoints
 
 /** The materialized positioned shingle index behind decontam_runs_idx:
   * probing it must (a) emit exactly the oracle-checked decontam_runs
@@ -127,7 +128,7 @@ class OverlapIndexSpec extends AnyFunSuite {
       OverlapIndex.materialize(day0, "graft_ovidx_crash")
       val preAppend = probe("graft_ovidx_crash")
       intercept[IllegalStateException] {
-        OverlapIndex.append(day1, "graft_ovidx_crash", 32, failBeforeCommit = true)
+        FaultPoints.armed(FaultPoints.OverlapAppend)(OverlapIndex.append(day1, "graft_ovidx_crash", 32))
       }
       assert(probe("graft_ovidx_crash") == preAppend,
         "a crashed append changed probe results — partial partitions are visible")

@@ -461,6 +461,26 @@ class ReplicatorSpec extends AnyFunSuite {
     assert(seen.toSeq == Seq(6L), "failed batch redelivered exactly")
   }
 
+  test("sink vacuum ages a superseded file from its retirement, not its creation") {
+    val (log, sink, rep) = fixture()
+    log.saveAll("t_events", (1 to 5).map(ev))
+    assert(rep.run("t_events") == 5L)
+    val old = sink.manifest().files.map(sink.root.resolve(_))
+    assert(old.size >= 2, s"fixture should commit several files, got ${old.size}")
+    // files written an hour ago, listed by a reader just now
+    val written = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 3600000L)
+    old.foreach(Files.setLastModifiedTime(_, written))
+    val before = sink.read("t_events").orderBy("offset").collect().toSeq
+    sink.compact(targetFiles = 1)
+    assert(sink.vacuum(graceMs = 600000L) == 0,
+      "a generation retired moments ago was reclaimed inside the grace window")
+    assert(old.forall(Files.exists(_)))
+    assert(sink.vacuum(graceMs = 0L) == old.size)
+    assert(!old.exists(Files.exists(_)))
+    assert(sink.read("t_events").orderBy("offset").collect().toSeq == before)
+  }
+
   test("sink compaction: files collapse, rows/offsets/cursor unchanged, vacuum reclaims, parked runs survive") {
     val (log, sink, rep) = fixture() // batchSize = 2 → several transactions
     log.saveAll("t_events", (1 to 7).map(ev))

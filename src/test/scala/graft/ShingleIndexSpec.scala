@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{IncrementalDedup, ShingleIndex}
 import graft.queries.CrossHash._
+import graft.util.FaultPoints
 
 /** The materialized bucketed shingle index: probing it must (a) emit
   * exactly the IncrementalDedup pair set for the same corpus/batch split
@@ -179,7 +180,7 @@ class ShingleIndexSpec extends AnyFunSuite {
       // swap not reached — the round-11 two-job append would now be
       // half-committed (pairs without counts)
       intercept[IllegalStateException] {
-        ShingleIndex.append(day1, "graft_shidx_crash", 32, failBeforeCommit = true)
+        FaultPoints.armed(FaultPoints.ShingleAppend)(ShingleIndex.append(day1, "graft_shidx_crash", 32))
       }
       assert(pairs() == preAppend,
         "a crashed append changed probe results — partial partitions are visible")

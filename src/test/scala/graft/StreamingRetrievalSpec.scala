@@ -9,6 +9,7 @@ import graft.operators.{Bm25Index, IntIvfIndex, IntegerKMeans, VectorIndex}
 import graft.queries.RetrievalQueries
 import graft.streaming.{MaintainedBm25Index, MaintainedIntIvfIndex,
   MaintainedVectorIndex, StreamingRetrieval}
+import graft.util.FaultPoints
 
 /** Streamed BM25 probing must equal the batch probe bit-for-bit: the
   * summed quantity is the exact scaled-long contribution, so window
@@ -329,7 +330,7 @@ class StreamingRetrievalSpec extends AnyFunSuite {
     }
     val bmPre = scores(bmA.probe(fx))
     assert(bmPre.nonEmpty, "vacuous bm25 fixture")
-    intercept[IllegalStateException](bmA.compact(failAfterStage = true))
+    intercept[IllegalStateException](FaultPoints.armed(FaultPoints.CompactSwap)(bmA.compact()))
     intercept[IllegalArgumentException](bmA.probe(fx))
     bmA.compact()
     assert(scores(bmA.probe(fx)) == bmPre, "bm25 probe changed across compact")
@@ -360,7 +361,7 @@ class StreamingRetrievalSpec extends AnyFunSuite {
     val vPre = hits(vA.probe(queries, k = 3, nprobe = 2))
     assert(vPre.nonEmpty, "vacuous vector fixture")
     assert(batchParts(vPathA.resolve("vectors")) == Seq("batch=0", "batch=1"))
-    intercept[IllegalStateException](vA.compact(failAfterStage = true))
+    intercept[IllegalStateException](FaultPoints.armed(FaultPoints.CompactSwap)(vA.compact()))
     intercept[IllegalArgumentException](vA.probe(queries, k = 3))
     vA.compact()
     assert(batchParts(vPathA.resolve("vectors")) == Seq("batch=0"),
@@ -399,7 +400,7 @@ class StreamingRetrievalSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val iPre = ahits(iA.probeAdc(queries, 2, 5, 40))
     assert(iPre.nonEmpty, "vacuous ivf fixture")
-    intercept[IllegalStateException](iA.compact(failAfterStage = true))
+    intercept[IllegalStateException](FaultPoints.armed(FaultPoints.CompactSwap)(iA.compact()))
     intercept[IllegalArgumentException](iA.probeAdc(queries, 2, 5, 40))
     iA.compact()
     assert(batchParts(iPathA.resolve("vectors")) == Seq("batch=0"),
